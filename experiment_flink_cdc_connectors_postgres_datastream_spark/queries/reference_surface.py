@@ -617,6 +617,13 @@ _COLOR_SQL = (
     "ELSE 'yellow' END"
 )
 
+#: the same derivation on the Spark side, shared by both envelope
+#: renderers of user_favorite_colors
+_SPARK_COLOR_SQL = (
+    "element_at(array('red', 'green', 'blue', 'yellow'), "
+    "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1)"
+)
+
 _FLAT_COLORS_SQL = f"""
     SELECT {_OP_SQL} AS op,
            'schema' || CAST(user_id % 4 + 1 AS VARCHAR) AS pgschema,
@@ -636,13 +643,9 @@ def synth_colors_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spread_scan(load_table(spark, sf_dir, "events"))
     # favorite_color = deterministic pick from the event value; whole
     # envelope rendered as SQL text (see `_envelope_sql`)
-    color_sql = (
-        "element_at(array('red', 'green', 'blue', 'yellow'), "
-        "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1)"
-    )
     return ev.selectExpr(
         _envelope_sql(
-            f"named_struct('user_id', user_id, 'favorite_color', {color_sql})",
+            f"named_struct('user_id', user_id, 'favorite_color', {_SPARK_COLOR_SQL})",
             "user_favorite_colors",
         )
         + " AS value"
@@ -693,15 +696,11 @@ def cdc_two_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.envelope import envelope_schema
 
     ev = spread_scan(load_table(spark, sf_dir, "events"))
-    color_sql = (
-        "element_at(array('red', 'green', 'blue', 'yellow'), "
-        "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1)"
-    )
     wire2 = ev.selectExpr(
         _envelope_sql("named_struct('id', user_id, 'full_name', props)", "users")
         + " AS u_value",
         _envelope_sql(
-            f"named_struct('user_id', user_id, 'favorite_color', {color_sql})",
+            f"named_struct('user_id', user_id, 'favorite_color', {_SPARK_COLOR_SQL})",
             "user_favorite_colors",
         )
         + " AS c_value",

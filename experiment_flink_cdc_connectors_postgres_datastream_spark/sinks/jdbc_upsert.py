@@ -281,25 +281,31 @@ class ParquetUpsertSink:
             ).drop("_gen", "_row_seq")
             store.commit(compacted, list(range(store.n_buckets)), version=batch_id)
             return
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-        full = store.gen_count() >= store.max_generations
-        prev = store.read(buckets=None if full else touched)
-        merged = batch
-        if prev is not None:
-            merged = prev.withColumn("_gen", F.lit(0)).withColumn(
-                "_row_seq", F.lit(0).cast("long")
-            ).unionByName(batch)
-        # compacted still carries _bucket (part of the payload)
-        compacted = compact_latest(
-            merged, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
-        ).drop("_gen", "_row_seq")
-        store.commit(
-            compacted,
-            list(range(store.n_buckets)) if full else touched,
-            version=batch_id,
-        )
+        # one scan of the batch: the touched-bucket collect materializes
+        # the cache and the merge reads the cached rows
+        batch = batch.persist()
+        try:
+            touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
+            if not touched:
+                return
+            full = store.gen_count() >= store.max_generations
+            prev = store.read(buckets=None if full else touched)
+            merged = batch
+            if prev is not None:
+                merged = prev.withColumn("_gen", F.lit(0)).withColumn(
+                    "_row_seq", F.lit(0).cast("long")
+                ).unionByName(batch)
+            # compacted still carries _bucket (part of the payload)
+            compacted = compact_latest(
+                merged, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
+            ).drop("_gen", "_row_seq")
+            store.commit(
+                compacted,
+                list(range(store.n_buckets)) if full else touched,
+                version=batch_id,
+            )
+        finally:
+            batch.unpersist()
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
         """Bucket ids the given rows map to, computed with the STORE's

@@ -202,47 +202,52 @@ def run_compacted_aggregate(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        batch = store.with_bucket(batch)
-        # touched bucket ids: bounded by n_buckets, so the collect is
-        # a tiny driver list, never data rows
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-        full_compaction = store.gen_count() >= store.max_generations
-        scope = None if full_compaction else touched
-        prev = store.read(buckets=scope)
-        # `_src_rank` makes state-vs-batch seq ties deterministic
-        # (state first, so an equal seq from the new batch wins) —
-        # the SQL-path mirror of merge_latest's stable-sort contract.
-        # Ranks: restored state 0, batch 1.
-        batch = batch.withColumn("_src_rank", F.lit(1))
-        merged = (
-            batch
-            if prev is None
-            else prev.withColumn("_src_rank", F.lit(0)).unionByName(batch)
-        )
-        tie_seq = [*seq_cols, "_src_rank"]
-        if unavailable_col is not None and unavailable_col in merged.columns:
-            # TOAST resolution over state ∪ batch: committed state
-            # rows are already resolved (markers cleared below), so
-            # they seed the per-key carry-forward for this batch's
-            # marked columns — cross-batch semantics without keeping
-            # history
-            reserved = set(key_cols) | set(seq_cols) | {unavailable_col, BUCKET_COL, "_src_rank"}
-            if op_col is not None:
-                reserved.add(op_col)
-            value_cols = [c for c in merged.columns if c not in reserved]
-            merged = resolve_unavailable(
-                merged, key_cols, tie_seq, value_cols, unavailable_col, op_col=op_col
+        # one scan of the micro-batch: the touched-bucket collect
+        # materializes the cache and the merge reads the cached rows
+        batch = store.with_bucket(batch).persist()
+        try:
+            # touched bucket ids: bounded by n_buckets, so the collect is
+            # a tiny driver list, never data rows
+            touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
+            if not touched:
+                return
+            full_compaction = store.gen_count() >= store.max_generations
+            scope = None if full_compaction else touched
+            prev = store.read(buckets=scope)
+            # `_src_rank` makes state-vs-batch seq ties deterministic
+            # (state first, so an equal seq from the new batch wins) —
+            # the SQL-path mirror of merge_latest's stable-sort contract.
+            # Ranks: restored state 0, batch 1.
+            ranked = batch.withColumn("_src_rank", F.lit(1))
+            merged = (
+                ranked
+                if prev is None
+                else prev.withColumn("_src_rank", F.lit(0)).unionByName(ranked)
             )
-        compacted = compact_latest(
-            merged, key_cols, tie_seq, op_col=op_col, drop_deletes=False
-        ).drop("_src_rank")
-        store.commit(
-            compacted,
-            list(range(store.n_buckets)) if full_compaction else touched,
-            version=batch_id,
-        )
+            tie_seq = [*seq_cols, "_src_rank"]
+            if unavailable_col is not None and unavailable_col in merged.columns:
+                # TOAST resolution over state ∪ batch: committed state
+                # rows are already resolved (markers cleared below), so
+                # they seed the per-key carry-forward for this batch's
+                # marked columns — cross-batch semantics without keeping
+                # history
+                reserved = set(key_cols) | set(seq_cols) | {unavailable_col, BUCKET_COL, "_src_rank"}
+                if op_col is not None:
+                    reserved.add(op_col)
+                value_cols = [c for c in merged.columns if c not in reserved]
+                merged = resolve_unavailable(
+                    merged, key_cols, tie_seq, value_cols, unavailable_col, op_col=op_col
+                )
+            compacted = compact_latest(
+                merged, key_cols, tie_seq, op_col=op_col, drop_deletes=False
+            ).drop("_src_rank")
+            store.commit(
+                compacted,
+                list(range(store.n_buckets)) if full_compaction else touched,
+                version=batch_id,
+            )
+        finally:
+            batch.unpersist()
         live = store.read()
         if op_col is not None:
             live = live.filter(~F.col(op_col).eqNullSafe(F.lit(DELETE_OP)))

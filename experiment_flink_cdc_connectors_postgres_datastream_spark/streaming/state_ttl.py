@@ -41,7 +41,10 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+    GenerationalStateStore,
+    _read_generation,
+)
 
 
 class TTLStateStore(GenerationalStateStore):
@@ -136,16 +139,14 @@ class TTLStateStore(GenerationalStateStore):
         # re-pointed EVERY touched bucket at the one generation it
         # wrote, and that directory physically holds only the touched
         # buckets' rows — so the read-back is exactly one scan of one
-        # directory.
+        # directory, typed by the schema the manifest records.
         manifest = self._current_manifest()
         gens = {manifest["buckets"][str(b)] for b in touched_buckets}
         # empty-bucket markers (statestore commit null-points a touched
         # bucket that received zero rows): nothing was physically
         # written for those buckets, so they contribute no event times.
-        # An ALL-empty commit (every touched bucket marked) wrote a
-        # footerless generation — skip the read-back entirely (no rows,
-        # no watermark candidate) instead of crashing on schema
-        # inference.
+        # An ALL-empty commit (every touched bucket marked) has no rows
+        # and so no watermark candidate — skip the read-back entirely.
         gens.discard(None)
         if not gens:
             return
@@ -158,7 +159,7 @@ class TTLStateStore(GenerationalStateStore):
                 f"touched buckets span generations immediately after commit: {sorted(gens)}"
             )
         row = (
-            self.spark.read.parquet(f"{self.root}/{gens.pop()}")
+            _read_generation(self.spark, self.root, gens.pop(), manifest)
             .agg(F.max(self.ttl_col))
             .collect()[0]
         )

@@ -7,11 +7,13 @@ StreamingJobWithCustomDeserializer.java:183-194, made 100-TB-viable):
 
 1. **Incremental I/O.** State rows are hash-partitioned into
    ``n_buckets`` by key (``pmod(xxhash64(keys), n)``), and each
-   generation directory ``gen-<v>/_bucket=<b>/`` holds complete
-   current contents for the buckets it owns. A micro-batch rewrites
-   ONLY the buckets its keys touch; a manifest maps every bucket to
-   the generation that currently owns it. Per-batch write I/O is
-   O(touched state), not O(total state).
+   generation directory ``gen-<v>/`` is one parquet file set, clustered
+   by the ``_bucket`` column, holding complete current contents for the
+   buckets it owns. A micro-batch rewrites ONLY the buckets its keys
+   touch; a manifest maps every bucket to the generation that currently
+   owns it. Per-batch write I/O is O(touched state), not O(total state).
+   Reads push the owned-bucket predicate down to the parquet scan,
+   where the clustering lets row-group statistics skip other buckets.
 
 2. **Atomic commit.** Nothing is ever overwritten in place: a batch
    writes a brand-new generation directory, then publishes it by
@@ -24,7 +26,10 @@ StreamingJobWithCustomDeserializer.java:183-194, made 100-TB-viable):
 
 All filesystem access goes through the Hadoop FileSystem API of the
 active session (never ``os.path``), so the store works unchanged on
-HDFS/S3A/local paths.
+HDFS/S3A/local paths. Every read is typed by the schema the manifest
+records, so no read lists footers to infer one; generations written in
+the older ``gen-<v>/_bucket=<b>/`` directory layout read back the same
+way (``_bucket`` then comes from the directory names).
 
 Generation buildup is bounded: when a manifest would reference more
 than ``max_generations`` distinct directories, the next commit is
@@ -37,7 +42,7 @@ from __future__ import annotations
 import json
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 BUCKET_COL = "_bucket"
@@ -46,6 +51,36 @@ BUCKET_COL = "_bucket"
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a row: pmod(xxhash64(keys), n)."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+def _read_generation(spark: SparkSession, root: str, gen: str, manifest: dict) -> DataFrame:
+    """One generation's rows, typed by the manifest's recorded schema.
+    Only a legacy manifest that predates schema recording leaves the
+    schema to footer inference."""
+    reader = spark.read
+    schema_json = manifest.get("schema")
+    if schema_json is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader.parquet(f"{root}/{gen}")
+
+
+def _write_generation(df: DataFrame, path: str, mode: str) -> Observation:
+    """Write ``df`` as one parquet file set clustered by ``_bucket``.
+    The returned observation carries, from that same write, the bucket
+    ids that received rows and the count of rows whose bucket id is
+    NULL (see :meth:`GenerationalStateStore._present_buckets`)."""
+    written = Observation()
+    (
+        df.observe(
+            written,
+            F.collect_set(BUCKET_COL).alias("buckets"),
+            F.count_if(F.col(BUCKET_COL).isNull()).alias("null_buckets"),
+        )
+        .sortWithinPartitions(BUCKET_COL)
+        .write.mode(mode)
+        .parquet(path)
+    )
+    return written
 
 
 class _Fs:
@@ -102,20 +137,17 @@ class GenerationalStateStore:
 
     Layout under ``root``::
 
-        gen-<v>/_bucket=<b>/*.parquet   rows of bucket b as of commit v
-        manifest-<v>.json               {"n_buckets": N, "buckets": {"b": "gen-x", ...}}
+        gen-<v>/*.parquet    rows of the buckets commit v wrote, clustered by _bucket
+        manifest-<v>.json    {"n_buckets": N, "buckets": {"b": "gen-x", ...}, "schema": ...}
 
     A bucket mapped to JSON ``null`` is the EMPTY-BUCKET MARKER: the
     bucket was explicitly committed with zero rows (every key deleted —
     e.g. a refresh batch whose groups all vanished, or a full
-    compaction in which TTL expiry emptied the bucket). ``partitionBy``
-    of a frame with no rows for a bucket writes no ``_bucket=<b>``
-    directory (and an all-empty frame writes a generation with zero
-    parquet footers), so pointing the bucket at that generation would
-    make every later read fail with UNABLE_TO_INFER_SCHEMA; the marker
-    records "known empty" instead, reads skip it, and the manifest
-    additionally stores the committed SCHEMA so an all-empty store
-    still reads back as a typed zero-row table rather than crashing.
+    compaction in which TTL expiry emptied the bucket). Reads skip it
+    without touching any file, so a store whose buckets are all empty
+    costs no scan at all. The manifest also stores the committed
+    SCHEMA: it types every generation read and lets an all-empty store
+    read back as a typed zero-row table.
     """
 
     def __init__(
@@ -178,8 +210,8 @@ class GenerationalStateStore:
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Current state rows (with the bucket column), optionally
         restricted to the given bucket ids. Groups buckets by owning
-        generation so each directory is scanned once, with partition
-        pruning on ``_bucket=``."""
+        generation so each directory is scanned once, with the owned
+        ``_bucket`` ids pushed down to the scan."""
         manifest = self._current_manifest()
         if manifest is None:
             return None
@@ -192,14 +224,11 @@ class GenerationalStateStore:
                 owned.setdefault(gen, []).append(b)
         parts = []
         for gen, bs in sorted(owned.items()):
-            # filter (not explicit partition paths): partition pruning
-            # reads only the owned _bucket= dirs, and buckets this gen
-            # wrote but no longer owns are excluded.
-            df = (
-                self.spark.read.parquet(f"{self.root}/{gen}")
-                .filter(F.col(BUCKET_COL).isin([int(b) for b in bs]))
+            # buckets this gen wrote but no longer owns are excluded
+            parts.append(
+                _read_generation(self.spark, self.root, gen, manifest)
+                .filter(F.col(BUCKET_COL).isin(bs))
             )
-            parts.append(df)
         if not parts:
             # committed-but-empty state (every selected bucket carries
             # the empty marker, or none is owned): a typed zero-row
@@ -223,37 +252,29 @@ class GenerationalStateStore:
     # -- commits --------------------------------------------------------------
 
     @staticmethod
-    def _present_buckets(io: _Fs, gen: str) -> set[int]:
-        """Bucket ids that physically exist (as ``_bucket=<b>`` dirs)
-        inside a just-written generation directory.
+    def _present_buckets(written: Observation, gen: str) -> set[int]:
+        """Bucket ids that received rows in the just-written generation
+        ``gen``, as observed on its write.
 
-        A ``_bucket=`` partition whose value does not parse as an int
-        (e.g. Hive's ``__HIVE_DEFAULT_PARTITION__`` from a NULL bucket
-        value) is a commit-contract violation, not noise: the rows
-        were physically written, but no manifest entry could ever own
-        them — continuing would null-mark their bucket and silently
-        orphan the data (ADVICE r15). Fail the commit loudly instead;
-        ``bucket_expr`` over non-null key columns can never produce
-        such a value, so this is only reachable by handing ``commit``
-        a frame with a corrupted/NULL ``_bucket`` column."""
-        prefix = f"{BUCKET_COL}="
-        out = set()
-        for name in io.list_names(io.path(gen)):
-            if name.startswith(prefix):
-                raw = name[len(prefix):]
-                try:
-                    out.add(int(raw))
-                except ValueError:
-                    raise ValueError(
-                        f"state store: generation {gen!r} contains partition "
-                        f"directory {name!r} whose bucket id is not an "
-                        f"integer — the committed frame carried a NULL or "
-                        f"non-integer {BUCKET_COL!r} value, and its rows "
-                        f"could never be owned by a manifest entry. Bucket "
-                        f"ids must come from bucket_expr() over non-null "
-                        f"key columns."
-                    ) from None
-        return out
+        A row with a NULL bucket id is a commit-contract violation, not
+        noise: the row was physically written, but no manifest entry
+        could ever own it — continuing would silently orphan the data
+        (ADVICE r15). Fail the commit loudly instead, before any
+        manifest is published; ``bucket_expr`` over non-null key
+        columns can never produce such a value, so this is only
+        reachable by handing ``commit`` a frame with a corrupted/NULL
+        ``_bucket`` column."""
+        metrics = written.get
+        if metrics["null_buckets"]:
+            raise ValueError(
+                f"state store: generation {gen!r} holds "
+                f"{metrics['null_buckets']} row(s) whose {BUCKET_COL!r} "
+                f"is NULL; a NULL bucket id is not an integer, so those "
+                f"rows could never be owned by a manifest entry. Bucket "
+                f"ids must come from bucket_expr() over non-null key "
+                f"columns."
+            )
+        return {int(b) for b in metrics["buckets"]}
 
     @staticmethod
     def _schema_fingerprint(schema: StructType) -> dict[str, str]:
@@ -333,18 +354,11 @@ class GenerationalStateStore:
         while self._io.exists(self._io.path(gen)):
             attempt += 1
             gen = f"gen-{version}-r{attempt}"
-        (
-            df.write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(f"{self.root}/{gen}")
-        )
-        # Empty-bucket markers: partitionBy only creates a _bucket=<b>
-        # directory for buckets that received rows. A touched bucket
-        # with NO directory was committed empty (every key deleted /
-        # expired) — point it at null, never at a directory that has no
-        # parquet footers for it (an ALL-empty generation has no
-        # footers at all and would crash every later read).
-        present = self._present_buckets(self._io, gen)
+        written = _write_generation(df, f"{self.root}/{gen}", "overwrite")
+        # Empty-bucket markers: a touched bucket that received no rows
+        # was committed empty (every key deleted / expired) — point it
+        # at null, so reads skip it instead of scanning for nothing.
+        present = self._present_buckets(written, gen)
         if manifest is None:
             manifest = {"n_buckets": self.n_buckets, "buckets": {}}
         buckets = dict(manifest["buckets"])
@@ -377,8 +391,8 @@ class GenerationalStateStore:
         ``gen-0`` + a ``manifest-0.json`` owning every bucket), so it
         can be opened read-only in place or restored into a fresh
         store root with :meth:`restore_from_savepoint`. The export is
-        one distributed compacting read→write (partition-pruned scans
-        of each owning generation, re-partitioned by bucket); nothing
+        one distributed compacting read→write (bucket-pruned scans of
+        each owning generation, written as one file set); nothing
         passes through the driver."""
         state = self.read()
         if state is None:
@@ -407,13 +421,12 @@ class GenerationalStateStore:
         # cleanup fires on a write-phase failure; a retry gets the
         # pre-check's remediation message instead of a confusing
         # errorifexists error.
-        state.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(f"{path}/gen-0")
+        written = _write_generation(state, f"{path}/gen-0", "errorifexists")
         try:
             # same empty-bucket contract as commit: buckets with no rows at
-            # snapshot time (including the whole-store-empty case, whose
-            # gen-0 has no parquet footers) get the null marker, so the
-            # savepoint stays readable and restorable
-            present = self._present_buckets(io, "gen-0")
+            # snapshot time (including the whole-store-empty case) get the
+            # null marker
+            present = self._present_buckets(written, "gen-0")
             manifest = {
                 "n_buckets": self.n_buckets,
                 "bucket_cols": self.bucket_cols,
@@ -464,13 +477,14 @@ class GenerationalStateStore:
         dst = _Fs(spark, root)
         if dst.exists(dst.path("manifest-0.json")):
             raise ValueError(f"restore target {root!r} already has state")
-        # an all-empty savepoint (every bucket null-marked) has a gen-0
-        # with no parquet footers — nothing to copy, and reading it
-        # would crash; the restored manifest alone carries the state
+        # an all-empty savepoint (every bucket null-marked) has nothing
+        # to copy; the restored manifest alone carries the state
         if any(g is not None for g in manifest["buckets"].values()):
-            spark.read.parquet(f"{savepoint_path}/gen-0").write.mode(
-                "errorifexists"
-            ).partitionBy(BUCKET_COL).parquet(f"{root}/gen-0")
+            _write_generation(
+                _read_generation(spark, savepoint_path, "gen-0", manifest),
+                f"{root}/gen-0",
+                "errorifexists",
+            )
         new_manifest = {
             "n_buckets": n_buckets,
             # record the source store's EFFECTIVE layout: a

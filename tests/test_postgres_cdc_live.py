@@ -2579,8 +2579,8 @@ def test_statestore_commit_guard_blocks_poisoned_relaunch_live(scratch, spark):
 
     # --- failure 2: guard-tripping batch — corrupt the computed
     # `_bucket` for the replayed insert so the commit writes a
-    # __HIVE_DEFAULT_PARTITION__ dir and the r16 _present_buckets guard
-    # raises POST-write, PRE-manifest-flip ---
+    # NULL-bucket row and the r16 _present_buckets guard (fed by the
+    # write's own observed metrics) raises POST-write, PRE-manifest-flip ---
     orig_with_bucket = GenerationalStateStore.with_bucket
 
     def corrupted(self, df):

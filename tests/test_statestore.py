@@ -41,16 +41,17 @@ def test_batch_rewrites_only_touched_buckets(spark, tmp_path):
     # seed all buckets
     seed = [(k, f"v{k}") for k in range(20)]
     _commit_rows(spark, store, seed, version=0)
-    gen0_buckets = sorted(os.listdir(tmp_path / "state" / "gen-0"))
-    assert len([d for d in gen0_buckets if d.startswith(BUCKET_COL)]) == 4
 
-    # one key -> exactly one bucket touched
+    def gen_buckets(gen):
+        rows = spark.read.parquet(str(tmp_path / "state" / gen)).select(BUCKET_COL)
+        return sorted({r[0] for r in rows.collect()})
+
+    assert gen_buckets("gen-0") == [0, 1, 2, 3]
+
+    # one key -> exactly one bucket touched, and gen-1 holds only its rows
     touched = _commit_rows(spark, store, [(3, "v3-new")], version=1)
     assert len(touched) == 1
-    gen1_buckets = [
-        d for d in os.listdir(tmp_path / "state" / "gen-1") if d.startswith(BUCKET_COL)
-    ]
-    assert gen1_buckets == [f"{BUCKET_COL}={touched[0]}"]
+    assert gen_buckets("gen-1") == touched
 
     # manifest points untouched buckets at gen-0, touched at gen-1
     manifest = json.loads((tmp_path / "state" / "manifest-1.json").read_text())
@@ -777,21 +778,88 @@ def test_ttl_commit_reads_back_exactly_one_generation(spark, tmp_path):
     assert store._watermark() == 900
 
 
+def _pushed_filters(df) -> str:
+    """The PushedFilters list of the plan's one FileScan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("PushedFilters: [") == 1, plan
+    return plan.split("PushedFilters: [", 1)[1].split("], ReadSchema:", 1)[0]
+
+
 def test_statestore_reads_are_partition_pruned_to_owned_buckets(spark, tmp_path):
     """Plan pin for the scale claim behind the generational layout —
     per-batch read I/O is O(touched buckets), not O(total state): a
-    bucket-scoped read compiles to a FileScan whose PartitionFilters
-    carry the `_bucket` predicate, so only the owned `_bucket=`
-    directories are listed and read. (The TTL watermark read-back no
-    longer needs this shape — since the ADVICE r12 simplification it
-    scans exactly the one directory the commit just wrote, which
-    holds only the touched buckets' rows by construction.)"""
+    bucket-scoped read compiles to a FileScan whose PushedFilters
+    carry the `_bucket` predicate, so parquet row groups of other
+    buckets (the generation is clustered by `_bucket`) are skipped.
+    (The TTL watermark read-back no longer needs this shape — since
+    the ADVICE r12 simplification it scans exactly the one directory
+    the commit just wrote, which holds only the touched buckets' rows
+    by construction.)"""
     store = _mk(spark, tmp_path, n_buckets=4)
     _commit_rows(spark, store, [(k, f"v{k}") for k in range(20)], version=0)
-    df = store.read(buckets=[1])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    assert BUCKET_COL in plan.split("PartitionFilters", 1)[1][:200], plan
+    pushed = _pushed_filters(store.read(buckets=[1]))
+    assert f"EqualTo({BUCKET_COL},1)" in pushed, pushed
+    pushed = _pushed_filters(store.read(buckets=[1, 2]))
+    assert BUCKET_COL in pushed, pushed
+
+
+def test_statestore_read_runs_no_schema_inference_job(spark, tmp_path):
+    """Every generation read is typed by the manifest's recorded
+    schema, so building a read runs no Spark job: footer schema
+    inference (one job per scanned generation) never happens."""
+    store = _mk(spark, tmp_path, n_buckets=4)
+    _commit_rows(spark, store, [(k, f"v{k}") for k in range(8)], version=0)
+    _commit_rows(spark, store, [(1, "v1b")], version=1)
+    assert store.gen_count() == 2
+    sc = spark.sparkContext
+    group = "statestore-read-build"
+    sc.setJobGroup(group, "build a store read")
+    try:
+        df = store.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert {(r["k"], r["v"]) for r in df.collect()} == {
+        (k, "v1b" if k == 1 else f"v{k}") for k in range(8)
+    }
+
+
+def test_store_in_partitioned_directory_layout_reads_and_accepts_commits(spark, tmp_path):
+    """Stores written in the earlier ``gen-<v>/_bucket=<b>/`` directory
+    layout stay readable and writable: the declared-schema read takes
+    ``_bucket`` from the directory names (pruned as a partition
+    filter), commits on top write the current one-file-set layout, and
+    savepoint/restore carry the mixed store over."""
+    root = tmp_path / "state"
+    seed = spark.createDataFrame([(k, f"v{k}") for k in range(12)], "k long, v string")
+    legacy = GenerationalStateStore(spark, str(root), ["k"], n_buckets=4).with_bucket(seed)
+    legacy.write.partitionBy(BUCKET_COL).parquet(str(root / "gen-0"))
+    assert sorted(os.listdir(root / "gen-0"))[-4:] == [f"{BUCKET_COL}={b}" for b in range(4)]
+    (root / "manifest-0.json").write_text(json.dumps({
+        "n_buckets": 4,
+        "bucket_cols": ["k"],
+        "buckets": {str(b): "gen-0" for b in range(4)},
+        "schema": legacy.schema.json(),
+    }))
+
+    store = _mk(spark, tmp_path, n_buckets=4)
+    assert {(r["k"], r["v"]) for r in store.read().collect()} == {(k, f"v{k}") for k in range(12)}
+    plan = store.read(buckets=[2])._jdf.queryExecution().executedPlan().toString()
+    assert BUCKET_COL in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0], plan
+
+    touched = _commit_rows(spark, store, [(3, "v3-new"), (20, "v20")], version=1)
+    assert set(touched) < {0, 1, 2, 3}
+    assert not any(n.startswith(f"{BUCKET_COL}=") for n in os.listdir(root / "gen-1"))
+    want = {(k, f"v{k}") for k in range(12) if k != 3} | {(3, "v3-new"), (20, "v20")}
+    assert store.gen_count() == 2
+    assert {(r["k"], r["v"]) for r in store.read().collect()} == want
+
+    sp = str(tmp_path / "sp")
+    store.savepoint(sp)
+    restored = GenerationalStateStore.restore_from_savepoint(
+        spark, sp, str(tmp_path / "restored"), ["k"]
+    )
+    assert {(r["k"], r["v"]) for r in restored.read().collect()} == want
 
 
 def test_ttl_single_generation_invariant_is_loud_not_assert(spark, tmp_path):
@@ -1250,12 +1318,11 @@ def test_emptied_store_read_compiles_scan_free(spark, tmp_path):
 
 
 def test_commit_rejects_null_bucket_partition_loudly(spark, tmp_path):
-    """ADVICE r15: a frame whose `_bucket` column carries NULL (or any
-    non-integer) writes a `_bucket=__HIVE_DEFAULT_PARTITION__`
-    partition that no manifest entry could ever own — silently
-    null-marking the bucket would orphan the rows. commit() must fail
-    loudly BEFORE publishing a manifest, leaving the prior state
-    intact and the store writable."""
+    """ADVICE r15: a frame whose `_bucket` column carries NULL writes
+    rows that no manifest entry could ever own — silently null-marking
+    the bucket would orphan them. commit() must fail loudly (the NULL
+    count is observed on the write itself) BEFORE publishing a
+    manifest, leaving the prior state intact and the store writable."""
     import pytest
 
     store = _mk(spark, tmp_path, n_buckets=4)
@@ -1392,7 +1459,7 @@ def test_savepoint_failure_after_write_cleans_partial_gen0(spark, tmp_path):
 
     real = GenerationalStateStore._present_buckets
 
-    def boom(io, gen):
+    def boom(written, gen):
         raise RuntimeError("injected post-write savepoint failure")
 
     GenerationalStateStore._present_buckets = staticmethod(boom)
@@ -1452,7 +1519,7 @@ def test_savepoint_loser_of_errorifexists_race_preserves_winner(
     friendly pre-check — must NOT delete the winner's in-progress
     gen-0. Before the fix, the loser's cleanup fired while the winner
     sat between its completed parquet write and its manifest publish;
-    the winner's _present_buckets then saw no _bucket= dirs and
+    the winner's _present_buckets then saw no bucket data and
     published an all-null-marked manifest — a 'successful' savepoint
     that silently restores EMPTY state. Now a write-phase failure
     propagates without deleting anyone's data, and the winner's
@@ -1480,7 +1547,7 @@ def test_savepoint_loser_of_errorifexists_race_preserves_winner(
     real_present = GenerationalStateStore._present_buckets
     loser = {"fired": False, "err": None}
 
-    def present_and_race(io, gen):
+    def present_and_race(written, gen):
         # The WINNER is here: after its completed gen-0 write, before
         # its manifest publish. Fire the loser inside that window.
         if not loser["fired"]:
@@ -1497,7 +1564,7 @@ def test_savepoint_loser_of_errorifexists_race_preserves_winner(
             finally:
                 pre_check_blind["on"] = False
             assert loser["err"] is not None, "loser's export unexpectedly succeeded"
-        return real_present(io, gen)
+        return real_present(written, gen)
 
     monkeypatch.setattr(ss._Fs, "exists", exists)
     monkeypatch.setattr(
@@ -1509,7 +1576,7 @@ def test_savepoint_loser_of_errorifexists_race_preserves_winner(
     )
 
     assert loser["fired"] and "exist" in loser["err"].lower()
-    # the winner's savepoint is whole: every bucket dir survived the
+    # the winner's savepoint is whole: its gen-0 survived the
     # loser, the manifest owns real data (not all-null markers), and a
     # restore yields the full state — the silent-empty outcome is the
     # regression this pins

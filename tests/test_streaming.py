@@ -899,6 +899,75 @@ def test_run_compacted_aggregate_refuses_reserved_src_rank_column(spark, tmp_pat
         )
 
 
+@pytest.mark.parametrize("path", ["compacted_aggregate", "parquet_upsert_sink"])
+def test_micro_batch_is_scanned_once(spark, tmp_path, path):
+    """Each stage-2 micro-batch goes through its source exactly once:
+    the touched-bucket collect and the state merge share one persisted
+    copy, so the batch's numInputRows equals the rows fed (a second
+    scan of the Python bus_upsert source would double it). Pinned for
+    both consumers of the store: run_compacted_aggregate and the
+    merge path of ParquetUpsertSink."""
+    import json as _json
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.bus_upsert import (
+        changelog_from_bus,
+        register_bus_source,
+        spool_frames,
+    )
+
+    n = 30
+    spool = str(tmp_path / "spool")
+    frames = [
+        (f"k{i}", _json.dumps({"id": i, "full_name": f"n{i % 3}"}), "users") for i in range(n)
+    ]
+    spool_frames(
+        spark.createDataFrame(frames, "key string, value string, topic string").coalesce(1),
+        spool,
+        seq=0,
+    )
+    register_bus_source(spark)
+    value_schema = StructType(
+        [StructField("id", LongType()), StructField("full_name", StringType())]
+    )
+    changelog = changelog_from_bus(
+        spark.readStream.format("bus_upsert").option("path", spool).load(), value_schema
+    )
+    sink = ParquetUpsertSink(
+        str(tmp_path / "sink"),
+        key_cols=["full_name"] if path == "compacted_aggregate" else ["key"],
+        seq_cols=None if path == "compacted_aggregate" else ["sequence_id"],
+    )
+    if path == "compacted_aggregate":
+        q = run_compacted_aggregate(
+            changelog,
+            state_dir=str(tmp_path / "state"),
+            key_cols=["key"],
+            seq_cols=["sequence_id"],
+            group_cols=["full_name"],
+            sink=sink,
+            query_name="scan_once_agg",
+        )
+        want = {(f"n{j}", n // 3) for j in range(3)}
+    else:
+        q = (
+            changelog.writeStream.foreachBatch(sink)
+            .queryName("scan_once_sink")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        want = {(f"k{i}", f"n{i % 3}") for i in range(n)}
+    q.processAllAvailable()
+    fed = [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+    q.stop()
+    assert fed == [n]
+    got = {tuple(r)[:2] for r in sink.read(spark).select(
+        *(["full_name", "user_count"] if path == "compacted_aggregate" else ["key", "full_name"])
+    ).collect()}
+    assert got == want
+
+
 def test_incremental_dedup_foreign_commit_log_never_folds_running_batch(spark, tmp_path):
     """ADVICE r10: if foreach_batch is handed a stale/mismatched
     checkpoint dir whose commits/ log already names the RUNNING batch
