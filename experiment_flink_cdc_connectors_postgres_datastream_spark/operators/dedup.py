@@ -42,20 +42,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct n-gram token shingles of a text column (array<string>).
-
-    Readable per-row form (higher-order functions are interpreted —
-    fine for inspection/small data). The bulk dedup operators use
-    ``shingle_hashes`` instead, which is fully codegen'd."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    gram = lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)])  # noqa: E731
-    grams = F.array_distinct(F.transform(idx, gram))
-    # sequence(1, 0) would generate a DESCENDING range: guard short docs
-    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
 def shingle_hashes(
     df: DataFrame,
     text_col: str = "text",
@@ -71,8 +57,8 @@ def shingle_hashes(
 
     Hot-path formulation: posexplode tokens → per-document window
     ``lead`` → one multi-column hash — everything whole-stage
-    codegen'd (the higher-order `shingles` expression is interpreted
-    and ~10× slower). The window shuffle partitions by document id,
+    codegen'd (a higher-order-function form is interpreted and ~10×
+    slower). The window shuffle partitions by document id,
     which is exactly how shingle work distributes at 100 TB. Shingle
     identity is an 8-byte hash (collision odds ~2⁻⁶⁴), so downstream
     joins/aggregations shuffle longs, never strings."""
@@ -94,24 +80,6 @@ def shingle_hashes(
         "_id", gram_hash.alias("_sh"), leads[-1].isNotNull().alias("_full") if leads else F.lit(True).alias("_full")
     ).filter(F.col("_full")).select("_id", "_sh")
     return sh.dropDuplicates(["_id", "_sh"]) if distinct else sh
-
-
-def minhash_signature(text_col: Column, num_hashes: int = 32, n: int = 3) -> Column:
-    """MinHash signature (array<bigint>) as a single column expression.
-
-    NOTE: higher-order functions are interpreted, not codegen'd — this
-    per-row form is O(num_hashes × shingles) interpreted evals. For
-    bulk signatures prefer ``minhash_signatures`` (explode + codegen'd
-    min aggregations), which is ~10× faster and shuffles only one
-    compacted row per document thanks to map-side partial aggregation."""
-    sh = shingles(text_col, n)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.coalesce(
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, k))),
-            F.lit(9223372036854775807),
-        ),
-    )
 
 
 def minhash_signatures(

@@ -1,5 +1,4 @@
-"""Message-bus sinks (K1/K2): keyed-JSON topic writes and the console
-debug sink.
+"""Message-bus wire projection (K2): keyed-JSON topic frames.
 
 Reference parity: the Pulsar sink serializes each typed event to JSON,
 sets the message key to the event's upsert key bytes, and writes one
@@ -8,8 +7,8 @@ topic per table with AT_LEAST_ONCE semantics
 README.md:131). The Kafka/Pulsar wire shape in Spark is identical:
 ``key binary, value binary`` (+ ``topic``) — ``to_keyed_json``
 produces exactly that projection, so the same DataFrame works with
-``format("kafka")``, a Pulsar connector, or (for tests) a parquet
-capture of the frames.
+``format("kafka")``, a Pulsar connector, or the bus spool
+(``sources.bus_upsert``).
 """
 
 from __future__ import annotations
@@ -38,37 +37,3 @@ def to_keyed_json(
     if topic is not None:
         cols.append(F.lit(topic).alias("topic"))
     return df.select(*cols)
-
-
-def write_stream_to_kafka(
-    df: DataFrame,
-    bootstrap_servers: str,
-    checkpoint_dir: str,
-    topic: str | None = None,
-    query_name: str = "bus_sink",
-):
-    """Start an at-least-once keyed write to a Kafka-API bus (needs the
-    spark-sql-kafka package on the cluster; the wire projection itself
-    is covered by tests without a broker)."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-    )
-    if topic is not None:
-        writer = writer.option("topic", topic)
-    return writer.start()
-
-
-def write_stream_to_console(df: DataFrame, query_name: str = "console_sink", num_rows: int = 20):
-    """K1 console/print sink (StreamingJob.java:80-81). Ordering within
-    a partition is preserved; the reference pins parallelism 1 for
-    global order — per-key order via key partitioning is the scalable
-    equivalent."""
-    return (
-        df.writeStream.format("console")
-        .option("numRows", num_rows)
-        .queryName(query_name)
-        .start()
-    )

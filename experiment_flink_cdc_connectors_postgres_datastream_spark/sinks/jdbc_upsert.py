@@ -261,51 +261,41 @@ class ParquetUpsertSink:
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog import compact_latest
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
+        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+            BUCKET_COL,
+            refuse_reserved,
+        )
 
-        spark = df.sparkSession
-        store = self._get_store(spark)
+        # the merge below would overwrite, then drop, a caller column
+        # of any of these names
+        refuse_reserved(df.columns, ["_gen", "_row_seq", BUCKET_COL], "ParquetUpsertSink")
+        store = self._get_store(df.sparkSession)
         # _gen separates old state (0) from this batch (1); _row_seq
         # makes the within-batch winner deterministic when seq_cols
         # don't fully order duplicates (last occurrence wins).
-        batch = store.with_bucket(
-            df.withColumn("_gen", F.lit(1)).withColumn(
-                "_row_seq", F.monotonically_increasing_id()
-            )
+        tagged = df.withColumn("_gen", F.lit(1)).withColumn(
+            "_row_seq", F.monotonically_increasing_id()
         )
+        order = ["_gen", *self.seq_cols, "_row_seq"]
         if self.refresh:
             # batch IS the whole table: dedupe within it, then rewrite
             # every bucket so absent keys (empty groups) are deleted
             compacted = compact_latest(
-                batch, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
+                store.with_bucket(tagged), self.key_cols, order
             ).drop("_gen", "_row_seq")
             store.commit(compacted, list(range(store.n_buckets)), version=batch_id)
             return
-        # one scan of the batch: the touched-bucket collect materializes
-        # the cache and the merge reads the cached rows
-        batch = batch.persist()
-        try:
-            touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-            if not touched:
-                return
-            full = store.gen_count() >= store.max_generations
-            prev = store.read(buckets=None if full else touched)
+
+        def combine(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
             merged = batch
             if prev is not None:
                 merged = prev.withColumn("_gen", F.lit(0)).withColumn(
                     "_row_seq", F.lit(0).cast("long")
                 ).unionByName(batch)
             # compacted still carries _bucket (part of the payload)
-            compacted = compact_latest(
-                merged, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
-            ).drop("_gen", "_row_seq")
-            store.commit(
-                compacted,
-                list(range(store.n_buckets)) if full else touched,
-                version=batch_id,
-            )
-        finally:
-            batch.unpersist()
+            return compact_latest(merged, self.key_cols, order).drop("_gen", "_row_seq")
+
+        store.merge(tagged, batch_id, combine)
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
         """Bucket ids the given rows map to, computed with the STORE's
@@ -313,13 +303,7 @@ class ParquetUpsertSink:
         values are overridden by an existing store's manifest — using
         them directly would prune the wrong buckets on reopen).
         Bounded collect: at most n_buckets ints."""
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
-
-        store = self._get_store(df.sparkSession)
-        return [
-            r[0]
-            for r in store.with_bucket(df).select(BUCKET_COL).distinct().collect()
-        ]
+        return self._get_store(df.sparkSession).touched_buckets(df)
 
     def read(self, spark: SparkSession, buckets: list[int] | None = None) -> DataFrame:
         """Committed state; with ``buckets``, a partition-pruned read of

@@ -31,8 +31,8 @@ records, so no read lists footers to infer one; generations written in
 the older ``gen-<v>/_bucket=<b>/`` directory layout read back the same
 way (``_bucket`` then comes from the directory names).
 
-Generation buildup is bounded: when a manifest would reference more
-than ``max_generations`` distinct directories, the next commit is
+Generation buildup is bounded: when the manifest already references
+``max_generations`` distinct directories, the next :meth:`merge` is
 promoted to a full compaction (all buckets rewritten into one new
 generation) — the classic LSM-style periodic major compaction.
 """
@@ -40,6 +40,7 @@ generation) — the classic LSM-style periodic major compaction.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -51,6 +52,24 @@ BUCKET_COL = "_bucket"
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a row: pmod(xxhash64(keys), n)."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+def refuse_reserved(columns: list[str], reserved: list[str], owner: str) -> None:
+    """Raise before any write when a caller frame carries one of
+    ``owner``'s internal column names, which ``owner`` would otherwise
+    silently overwrite or drop."""
+    clash = [c for c in reserved if c in columns]
+    if clash:
+        raise ValueError(
+            f"{owner} reserves the internal column name(s) {clash}; the "
+            f"input already carries a column of that name — rename it first."
+        )
+
+
+def _distinct_buckets(bucketed: DataFrame) -> list[int]:
+    """Bucket ids present in a frame that carries ``_bucket``: a
+    bounded collect of at most ``n_buckets`` ints, never data rows."""
+    return [r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()]
 
 
 def _read_generation(spark: SparkSession, root: str, gen: str, manifest: dict) -> DataFrame:
@@ -206,6 +225,11 @@ class GenerationalStateStore:
 
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(BUCKET_COL, bucket_expr(self.bucket_cols, self.n_buckets))
+
+    def touched_buckets(self, df: DataFrame) -> list[int]:
+        """Bucket ids ``df``'s rows map to under this store's (manifest-
+        honored) ``bucket_cols`` / ``n_buckets``."""
+        return _distinct_buckets(self.with_bucket(df))
 
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Current state rows (with the bucket column), optionally
@@ -378,6 +402,40 @@ class GenerationalStateStore:
             json.dumps(new_manifest),
         )
         self._gc(keep_manifests=2)
+
+    def merge(
+        self,
+        batch: DataFrame,
+        version: int,
+        combine: Callable[[DataFrame | None, DataFrame], DataFrame],
+    ) -> bool:
+        """Merge one micro-batch into the store as generation ``version``.
+
+        ``combine(prev, batch)`` returns the complete new rows of the
+        buckets ``batch`` touches: ``prev`` is the current state of
+        those buckets (``None`` before the first commit) and ``batch``
+        carries ``_bucket``. The batch is scanned once: the touched-
+        bucket collect materializes its cache and ``combine`` reads the
+        cached rows. When the store already references
+        ``max_generations`` generations, the merge is promoted to a full
+        compaction: ``prev`` is the whole state and every bucket is
+        rewritten into the one new generation. Returns False, having
+        committed nothing, when the batch has no rows."""
+        batch = self.with_bucket(batch).persist()
+        try:
+            touched = _distinct_buckets(batch)
+            if not touched:
+                return False
+            full = self.gen_count() >= self.max_generations
+            prev = self.read(buckets=None if full else touched)
+            self.commit(
+                combine(prev, batch),
+                list(range(self.n_buckets)) if full else touched,
+                version=version,
+            )
+            return True
+        finally:
+            batch.unpersist()
 
     # -- savepoints -----------------------------------------------------------
 

@@ -993,11 +993,10 @@ def test_generational_store_matches_pure_python_model_property(spark, tmp_path):
     """VERDICT r14 #6: model-based property over the generational
     manifest/compaction machinery itself (the TTL watermark property
     exists; this one drives the BASE store's commit/read/reopen/
-    compaction protocol). Random schedules of merge-commits,
-    empty-refresh commits (the r15 marker path), caller-driven full
-    compactions at the max_generations threshold (the ParquetUpsertSink
-    / run_compacted_aggregate protocol), and store reopens are replayed
-    against a pure-Python dict; after every schedule the full read, a
+    compaction protocol). Random schedules of merge-commits through
+    ``store.merge`` (with its full compactions at the max_generations
+    threshold), empty-refresh commits (the r15 marker path), and store
+    reopens are replayed against a pure-Python dict; after every schedule the full read, a
     per-bucket pruned read, and the generation-count bound must all
     match the model."""
     import uuid as _uuid
@@ -1059,28 +1058,25 @@ def test_generational_store_matches_pure_python_model_property(spark, tmp_path):
         for op, arg in schedule:
             version += 1
             if op == "commit":
-                batch = spark_df([(k, v) for k, v in arg])
-                touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-                # the caller protocol: promote to a full compaction at
-                # the generation bound, exactly like ParquetUpsertSink /
-                # run_compacted_aggregate
-                full = store.gen_count() >= store.max_generations
-                scope = list(range(n_buckets)) if full else touched
-                if not touched and not full:
+                # the production protocol (store.merge: touched-bucket
+                # scope, full compaction at the generation bound), as
+                # ParquetUpsertSink / run_compacted_aggregate drive it
+                def combine(prev, batch):
+                    merged = batch if prev is None else prev.unionByName(batch)
+                    return (
+                        merged.groupBy("k")
+                        .agg(
+                            F.max_by(
+                                F.struct("k", "v", BUCKET_COL), F.struct(F.lit(version))
+                            ).alias("s")
+                        )
+                        .select("s.k", "s.v", f"s.{BUCKET_COL}")
+                    )
+
+                batch = spark.createDataFrame(arg, "k long, v long")
+                if not store.merge(batch, version, combine):
                     version -= 1  # the sink's no-op early return
                     continue
-                prev = store.read(buckets=None if full else touched)
-                merged = batch if prev is None else prev.unionByName(batch)
-                latest = (
-                    merged.groupBy("k")
-                    .agg(
-                        F.max_by(
-                            F.struct("k", "v", BUCKET_COL), F.struct(F.lit(version))
-                        ).alias("s")
-                    )
-                    .select("s.k", "s.v", f"s.{BUCKET_COL}")
-                )
-                store.commit(latest, scope, version)
                 for k, v in arg:
                     model[k] = v
             elif op == "empty_refresh":
@@ -1164,8 +1160,8 @@ def test_generational_store_matches_pure_python_model_property(spark, tmp_path):
             )
             assert got == by_bucket.get(b, set())
         # the LSM bound: distinct live generations never exceed the
-        # caller-enforced threshold (a commit finding gen_count at the
-        # threshold promotes itself to a full compaction -> 1)
+        # threshold store.merge enforces (a merge finding gen_count at
+        # the threshold promotes itself to a full compaction -> 1)
         assert store.gen_count() <= max_generations
     check()
 

@@ -30,10 +30,7 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc import parse_
 from experiment_flink_cdc_connectors_postgres_datastream_spark.queries.reference_surface import USERS_ROW_SCHEMA
 from experiment_flink_cdc_connectors_postgres_datastream_spark.sinks import ParquetUpsertSink, route_foreach_batch
 from experiment_flink_cdc_connectors_postgres_datastream_spark.sources import read_cdc_file_stream
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming import (
-    run_compacted_aggregate,
-    stream_compact_latest,
-)
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming import run_compacted_aggregate
 from tests.golden_cdc import (
     EXPECTED_COUNTS_AFTER_DELETE,
     WITH_SNAPSHOT_AND_DELETE,
@@ -77,29 +74,6 @@ def test_foreachbatch_compacted_aggregate_matches_batch(spark, cdc_dir, tmp_path
     q.stop()
     result = {r["schema"]: r["user_count"] for r in sink.read(spark).collect()}
     assert result == EXPECTED_COUNTS_AFTER_DELETE
-
-
-def test_stream_compact_latest_state_updates(spark, cdc_dir):
-    stream = read_cdc_file_stream(spark, cdc_dir, max_files_per_trigger=1)
-    flat = _flat_users(stream).select("key", "op", "schema", "ts_ms", "lsn", "full_name")
-    compacted = stream_compact_latest(flat, ["key"], ["ts_ms", "lsn"], op_col="op")
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("compacted_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM compacted_mem").collect()
-    # final state per key = last emitted row for that key
-    final: dict[str, tuple] = {}
-    for r in rows:
-        final[r["key"]] = (r["full_name"], r["_live"])
-    assert final["schema1|1"] == ("sue smith", True)
-    assert final["schema2|1"] == ("bobby smith", True)
-    assert final["schema1|2"][1] is False          # tombstoned
-    assert final["schema3|7"] == ("snap shot", True)  # snapshot row live
 
 
 def test_route_foreach_batch_single_pass_multi_sink(spark, cdc_dir, tmp_path):
@@ -158,56 +132,10 @@ def test_streaming_tumbling_window(spark, tmp_path):
     assert got == {(0, "a"): 2, (5, "b"): 1, (5, "a"): 1}
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs the protobuf package for its "
-    "state-server protocol; not installed in this container",
-)
-def test_stream_compact_latest_tws_matches_legacy(spark, cdc_dir):
-    """transformWithStateInPandas compaction (StatefulProcessor API)
-    reaches the same final per-key state as the applyInPandasWithState
-    path, and its second state variable counts changes per key."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import stream_compact_latest_tws
-
-    stream = read_cdc_file_stream(spark, cdc_dir, max_files_per_trigger=1)
-    flat = _flat_users(stream).select("key", "op", "schema", "ts_ms", "lsn", "full_name")
-    compacted = stream_compact_latest_tws(flat, ["key"], ["ts_ms", "lsn"], op_col="op")
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("compacted_tws_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM compacted_tws_mem").collect()
-    final: dict[str, tuple] = {}
-    changes: dict[str, int] = {}
-    for r in rows:
-        final[r["key"]] = (r["full_name"], r["_live"])
-        changes[r["key"]] = max(changes.get(r["key"], 0), r["_n_changes"])
-    assert final["schema1|1"] == ("sue smith", True)
-    assert final["schema2|1"] == ("bobby smith", True)
-    assert final["schema1|2"][1] is False
-    assert final["schema3|7"] == ("snap shot", True)
-    # schema1|1 sees insert + update across the fixture
-    assert changes["schema1|1"] >= 2
-    assert all(n >= 1 for n in changes.values())
-
-
 def test_merge_latest_semantics():
-    """Direct unit test of the merge shared by both stateful
-    backends: highest seq wins; on seq ties the NEW batch row beats
-    restored state (arrival order)."""
+    """Direct unit test of the pandas reference fold: highest seq
+    wins; on seq ties the NEW batch row beats restored state (arrival
+    order)."""
     import pandas as pd
 
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import merge_latest
@@ -776,29 +704,6 @@ def _toast_flat(spark, path):
     )
 
 
-def test_stream_compact_latest_resolves_toast_across_batches(spark, toast_cdc_dir):
-    path, big = toast_cdc_dir
-    flat = _toast_flat(spark, path)
-    compacted = stream_compact_latest(
-        flat, ["id"], ["ts_ms", "lsn"], op_col="op", unavailable_col="unavailable"
-    )
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("toast_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}
-    for r in spark.sql("SELECT * FROM toast_mem ORDER BY lsn").collect():
-        final[r["id"]] = (r["n"], r["body"])
-    # id 1: update marked body unavailable -> carried from batch-1 state
-    assert final[1] == (2, big)
-    # id 2: REAL null update must still win (not resurrected)
-    assert final[2] == (2, None)
-
-
 def test_compacted_aggregate_resolves_toast_across_batches(spark, toast_cdc_dir, tmp_path):
     path, big = toast_cdc_dir
     flat = _toast_flat(spark, path)
@@ -897,6 +802,39 @@ def test_run_compacted_aggregate_refuses_reserved_src_rank_column(spark, tmp_pat
             group_cols=["id"],
             query_name="reserved_src_rank",
         )
+
+
+def test_run_compacted_aggregate_refuses_reserved_bucket_column(spark, tmp_path):
+    """'_bucket' is the state store's bucket-id column: a caller column
+    of that name would be silently overwritten with the bucket id. The
+    operator refuses it loudly at construction, like '_src_rank'."""
+    stream = spark.readStream.schema("id long, seq long, _bucket long").json(str(tmp_path))
+    with pytest.raises(ValueError, match="_bucket"):
+        q = run_compacted_aggregate(
+            stream,
+            state_dir=str(tmp_path / "state"),
+            key_cols=["id"],
+            seq_cols=["seq"],
+            group_cols=["id"],
+            query_name="reserved_bucket",
+        )
+        q.stop()
+
+
+@pytest.mark.parametrize("refresh", [False, True])
+@pytest.mark.parametrize("col", ["_gen", "_row_seq", "_bucket"])
+def test_parquet_upsert_sink_refuses_reserved_columns(spark, tmp_path, col, refresh):
+    """The sink's merge tags rows with '_gen'/'_row_seq' and drops them
+    after compaction, and the store assigns '_bucket': a caller column
+    of any of those names used to be overwritten, then dropped (a
+    ``k, _gen, v`` batch read back as ``k, v``). It is refused before
+    any write, in both merge and refresh mode."""
+    path = str(tmp_path / "sink")
+    sink = ParquetUpsertSink(path, key_cols=["k"], refresh=refresh)
+    batch = spark.createDataFrame([(1, 7, "a")], f"k long, {col} long, v string")
+    with pytest.raises(ValueError, match=col):
+        sink(batch, 0)
+    assert not os.path.exists(path) or not os.listdir(path)
 
 
 @pytest.mark.parametrize("path", ["compacted_aggregate", "parquet_upsert_sink"])
